@@ -25,3 +25,14 @@ def stage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist exactly the RDD a :func:`stage_checkpoint` pinned —
+    unlike :func:`calorista_spark.cache.release_caches`, every other
+    caller's pin survives. ``df`` must be the frame
+    :func:`stage_checkpoint` returned (its plan is the checkpointed
+    ``LogicalRDD``) and must not be read afterwards: its lineage is
+    truncated, so the released blocks were the only copy. A reliable
+    checkpoint persists nothing and releasing it is a no-op."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

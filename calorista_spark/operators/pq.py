@@ -35,6 +35,7 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
 # integer micro-unit quantization for every distance that crosses an
@@ -261,7 +262,6 @@ def sdc_dist_udf(tables):
     fancy-index. Integer in, integer out — no float path, so parity
     with the SQL renderer is trivial. Null/ragged code arrays map to
     null (totality)."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     T = np.asarray(tables, dtype=np.int64)  # (m, k, k)
@@ -270,12 +270,12 @@ def sdc_dist_udf(tables):
 
     from pyspark.sql import types as T_
 
-    # explicit eval type (the hint inferencer can't resolve pd.Series
-    # annotations with pandas imported locally) and a DataType OBJECT,
+    # Series, Series -> Series hints state the scalar eval type (pandas
+    # is a module global so the hints resolve) and a DataType OBJECT,
     # not a DDL string — string parsing needs an active session, and
     # this UDF is built at module import (pq_assign_udf's contract)
-    @F.pandas_udf(T_.LongType(), F.PandasUDFType.SCALAR)
-    def _sdc(a, b):
+    @F.pandas_udf(T_.LongType())
+    def _sdc(a: pd.Series, b: pd.Series) -> pd.Series:
         n = len(a)
         A = np.zeros((n, m), dtype=np.int64)
         B = np.zeros((n, m), dtype=np.int64)
@@ -346,7 +346,6 @@ def pq_assign_udf(codebook: np.ndarray):
     """Returns a scalar pandas_udf: embedding array<float> →
     struct(codes array<int>, recon bigint) under the frozen codebook.
     Null or element-null embeddings map to a null struct (totality)."""
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -368,12 +367,11 @@ def pq_assign_udf(codebook: np.ndarray):
         ]
     )
 
-    # struct-returning scalar pandas_udf: the Series->DataFrame type-
-    # hint form is not accepted by the hint inferencer, so the eval
-    # type is passed explicitly (the documented StructType contract:
+    # struct-returning scalar pandas_udf: the Series -> DataFrame hints
+    # state the scalar eval type (the documented StructType contract:
     # the function returns a pd.DataFrame with one column per field)
-    @F.pandas_udf(out_type, F.PandasUDFType.SCALAR)
-    def _assign(col):
+    @F.pandas_udf(out_type)
+    def _assign(col: pd.Series) -> pd.DataFrame:
         n = len(col)
         valid = np.zeros(n, dtype=bool)
         X = np.zeros((n, dim), dtype=np.float64)

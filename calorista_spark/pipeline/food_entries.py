@@ -22,6 +22,7 @@ from calorista_spark.functions.dates import (
     month_label,
     month_start,
 )
+from calorista_spark.operators.checkpoint import release_checkpoint, stage_checkpoint
 from calorista_spark.operators.dedup import exact_dedup
 from calorista_spark.operators.reshape import date_spine
 from calorista_spark.sources.commitlog import CommitLogStore
@@ -48,16 +49,30 @@ def sync(
     manifest publication (no torn-write window on the ACTUAL ETL
     path), and every sync is a time-travelable version. The
     fingerprint embeds date_int, so the partition∈key contract holds.
+
+    The source is read exactly once per sync. The merge consumes its
+    batch twice (the touched-partition scoping aggregate, then the
+    staged write), so the normalized, deduped batch is pinned with
+    :func:`stage_checkpoint` first. Without the pin every day is
+    fetched twice, and a live API that answers the second GET
+    differently could land rows in a partition the first pass never
+    marked as touched — stored beside that partition's carried files.
+    The pin is released once the merge has committed or failed.
     """
     raw = fetch_range(spark, source, start, end)
     entries = normalize_day_payloads(raw.select("payload"))
-    deduped = exact_dedup(
-        entries,
-        keys=["fingerprint"],
-        keep_order=["date_int", "timestamp", "food_entry_id"],
+    batch = stage_checkpoint(
+        exact_dedup(
+            entries,
+            keys=["fingerprint"],
+            keep_order=["date_int", "timestamp", "food_entry_id"],
+        )
     )
     store = CommitLogStore(store_path)
-    store.merge(spark, deduped, keys=["fingerprint"], partition_by="date")
+    try:
+        store.merge(spark, batch, keys=["fingerprint"], partition_by="date")
+    finally:
+        release_checkpoint(batch)
     return store.read(spark)
 
 

@@ -186,14 +186,20 @@ def fetch_range(
 
     Partition count caps request concurrency (the connector's rate
     limit); each partition runs the source serially, so total
-    in-flight requests == partitions.
+    in-flight requests == min(partitions, task slots). Partitions
+    beyond the slot count (``defaultParallelism``) would only queue,
+    so the fan-out never exceeds it: the same concurrency from fewer
+    Python tasks.
     """
     dates = date_range_df(spark, start, end)
     # spine length is closed-form — no Spark job for partition sizing
     d0 = datetime.date.fromisoformat(str(start))
     d1 = datetime.date.fromisoformat(str(end))
     n_days = (d1 - d0).days + 1
-    parts = max(1, min(max_parallel_fetches, n_days))
+    parts = max(
+        1,
+        min(max_parallel_fetches, n_days, spark.sparkContext.defaultParallelism),
+    )
 
     out_schema = T.StructType(
         [

@@ -16,6 +16,8 @@ from calorista_spark.operators.multimodal import (
 )
 from calorista_spark.operators.similarity import (
     cosine_topk_bruteforce,
+    lsh_band_keys,
+    minhash_band_keys,
     minhash_signatures,
     ngram_jaccard,
     shingles,
@@ -49,6 +51,35 @@ def test_minhash_identical_docs_share_signature(spark):
     assert by_doc[1] == by_doc[2]
     assert by_doc[1] != by_doc[3]
     assert len(by_doc[1]) == 8
+
+
+def test_minhash_band_keys_match_long_format_band_keys(spark):
+    # the wide-aggregate band keys must equal the long-format detour's,
+    # row for row, including docs with null, empty, too-short, unicode
+    # and whitespace-only text (no shingles → no band rows on either side)
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy cat"),
+         (3, None),
+         (4, ""),
+         (5, "two words"),
+         (6, "naïve café résumé — 東京 タワー 🚀 über straße"),
+         (7, "   \t  "),
+         (8, "東京 タワー 🚀 über straße naïve café")],
+        "doc_id long, text string",
+    )
+    direct = minhash_band_keys(docs, "doc_id", "text", num_hashes=16,
+                               rows_per_band=4)
+    via_long = lsh_band_keys(
+        minhash_signatures(docs, "doc_id", "text", num_hashes=16),
+        "doc_id", 4,
+    )
+    cols = ["doc_id", "band", "band_key"]
+    got = sorted(tuple(r) for r in direct.select(*cols).collect())
+    want = sorted(tuple(r) for r in via_long.select(*cols).collect())
+    assert got == want
+    assert {r[0] for r in got} == {1, 2, 6, 8}
+    assert len(got) == 4 * 4
 
 
 def test_ngram_jaccard_bounds(spark):

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import datetime
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from calorista_spark.cache import cached_rdd_count
 from calorista_spark.pipeline.food_entries import (
     daily_range_section,
     latest_day_section,
@@ -69,6 +71,28 @@ def _write_fixtures(dir_path) -> None:
     # day 6: missing file (fetch returns None)
 
 
+class CountingFakeSource(FileFakeSource):
+    """:class:`FileFakeSource` that appends one line to
+    ``<log_dir>/<date>.log`` per call, so calls made on executors are
+    countable from the driver. Picklable (carries only two paths)."""
+
+    def __init__(self, fixture_dir: str, log_dir: str):
+        super().__init__(fixture_dir)
+        self.log_dir = log_dir
+
+    def __call__(self, date_iso: str) -> str | None:
+        with open(os.path.join(self.log_dir, f"{date_iso}.log"), "a") as f:
+            f.write("call\n")
+        return super().__call__(date_iso)
+
+    def calls(self) -> dict[str, int]:
+        out = {}
+        for name in os.listdir(self.log_dir):
+            with open(os.path.join(self.log_dir, name)) as f:
+                out[name.removesuffix(".log")] = len(f.readlines())
+        return out
+
+
 @pytest.fixture()
 def fixture_dir(tmp_path):
     d = tmp_path / "days"
@@ -110,6 +134,23 @@ def test_sync_idempotent_and_upsert(spark, fixture_dir, tmp_path):
     assert state3.count() == n1
     cal = state3.filter(F.col("food_entry_id") == "e02").collect()[0].calories
     assert cal == 999.0
+
+
+def test_sync_reads_source_once_per_date(spark, fixture_dir, tmp_path):
+    """The merge consumes its batch twice (partition scoping, then the
+    staged write); the pinned batch keeps that to ONE fetch per date,
+    on the first load and on a re-sync over a partitioned store, and
+    the pin is released once the merge has committed."""
+    store = str(tmp_path / "store")
+    days = [f"2024-03-0{d}" for d in range(1, 7)]
+    for attempt in range(2):
+        log_dir = tmp_path / f"calls{attempt}"
+        log_dir.mkdir()
+        src = CountingFakeSource(str(fixture_dir), str(log_dir))
+        pinned = cached_rdd_count(spark)
+        assert sync(spark, src, store, days[0], days[-1]).count() == 4
+        assert src.calls() == {d: 1 for d in days}
+        assert cached_rdd_count(spark) == pinned
 
 
 def test_dashboard_sections(spark, fixture_dir, tmp_path):

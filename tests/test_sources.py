@@ -11,6 +11,7 @@ from calorista_spark.sources.rest import (
     FileFakeSource,
     fetch_day,
     fetch_month,
+    fetch_range,
     with_retries,
 )
 
@@ -30,6 +31,18 @@ def test_fetch_month_covers_calendar_month(spark, tmp_path):
     rows = fetch_month(spark, FileFakeSource(str(tmp_path)), 2024, 2).collect()
     assert len(rows) == 29  # leap February
     assert sum(r.payload is not None for r in rows) == 1
+
+
+@pytest.mark.parametrize("end", ["2024-05-10", "2024-05-01"])
+def test_fetch_range_fans_out_no_wider_than_task_slots(spark, tmp_path, end):
+    # partitions beyond the slot count would only queue: the fan-out is
+    # min(max_parallel_fetches, days, defaultParallelism)
+    src = FileFakeSource(str(tmp_path))
+    raw = fetch_range(spark, src, "2024-05-01", end)
+    n_days = int(end[-2:])
+    slots = spark.sparkContext.defaultParallelism
+    assert raw.rdd.getNumPartitions() == min(32, n_days, slots)
+    assert raw.count() == n_days
 
 
 def test_with_retries_recovers_then_raises():
