@@ -196,7 +196,7 @@ def _band_kll_quantiles(spark: SparkSession, sf_dir: str) -> dict:
     distribution-dependent. merged-vs-direct rides along as relative
     rank difference (estimate-close, not bit-identical — the HLL
     lesson)."""
-    from calorista_spark.catalog import read_table
+    from calorista_spark.catalog import local_table, read_table
     from calorista_spark.queries import QUERIES
 
     ev = read_table(spark, sf_dir, "events")
@@ -206,7 +206,8 @@ def _band_kll_quantiles(spark: SparkSession, sf_dir: str) -> dict:
     ).where("v IS NOT NULL")
     rows = QUERIES["events_value_quantiles_kll"](spark, sf_dir).collect()
     day_rows = [r for r in rows if not r.day.startswith("TOTAL")]
-    est = spark.createDataFrame(
+    est = local_table(
+        spark,
         [(r.day, float(r.p50), float(r.p90)) for r in day_rows],
         "day string, p50 double, p90 double",
     )

@@ -13,8 +13,10 @@ temp views so any operator can be expressed in Spark SQL as well.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -109,6 +111,34 @@ def read_table(
         df = globals()["fan_out"](df)
     cache[key] = df
     return df
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A driver-built table (``rows`` of tuples in ``schema`` order)
+    as a DataFrame that lives in the JVM.
+
+    The rows go over as one Arrow table, so the plan is a
+    ``LocalRelation`` whatever ``spark.sql.execution.arrow.pyspark.
+    enabled`` says: scanning or broadcasting it runs no Spark job and
+    forks no Python worker. ``spark.createDataFrame(list)`` instead
+    plans a ``LogicalRDD`` over ``sc.parallelize``, which cuts even a
+    3-row table into ``defaultParallelism`` tasks that each start a
+    Python worker to unpickle their slice. ``schema`` (a StructType or
+    DDL string) is kept as given, nullability included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from calorista_spark.catalog import local_table
 from calorista_spark.functions.vectors import dot, l2_norm
 from calorista_spark.operators.similarity import ivf_centroids
 from calorista_spark.sources.commitlog import CommitLogStore
@@ -260,8 +261,8 @@ class IVFVectorIndex:
             # the empty-table stress axis): an empty quantizer, so the
             # index stays well-formed and every probe returns 0 rows
             cents_rows = []
-        cdf = spark.createDataFrame(
-            cents_rows, "bucket int, centroid array<double>"
+        cdf = local_table(
+            spark, cents_rows, "bucket int, centroid array<double>"
         ).withColumn("c_norm", l2_norm("centroid"))
         self.centroids_store.commit(
             cdf,
@@ -428,7 +429,8 @@ class IVFVectorIndex:
             for r in assigned.select("probe_bucket").distinct().collect()
         )
         if not probed:
-            return spark.createDataFrame(
+            return local_table(
+                spark,
                 [],
                 "q_id long, probe_bucket int, cand_id long, "
                 "sim double, rank int",
@@ -570,8 +572,8 @@ class PQCodeIndex:
         # retrain = overwrite against whatever head exists (a fresh
         # index has head None; a drift retrain has a real head)
         self.codebook_store.commit(
-            spark.createDataFrame(
-                rows, "subspace int, code int, centroid array<double>"
+            local_table(
+                spark, rows, "subspace int, code int, centroid array<double>"
             ),
             op="overwrite",
             expect_version=self.codebook_store.latest_version(),
@@ -769,8 +771,8 @@ class IVFPQIndex(IVFVectorIndex):
             for c in range(cb.shape[1])
         ]
         self.pq_codebook_store.commit(
-            spark.createDataFrame(
-                rows, "subspace int, code int, centroid array<double>"
+            local_table(
+                spark, rows, "subspace int, code int, centroid array<double>"
             ),
             op="overwrite",
             expect_version=self.pq_codebook_store.latest_version(),
@@ -909,7 +911,8 @@ class IVFPQIndex(IVFVectorIndex):
         # parallelized RDD loses size stats and its joins replan).
         probe_rows = probes.collect()
         probed = sorted({r.probe_bucket for r in probe_rows})
-        empty = spark.createDataFrame(
+        empty = local_table(
+            spark,
             [],
             "q_id long, cand_id long, adc_dist_q bigint, "
             "sim double, rank int",
@@ -933,8 +936,8 @@ class IVFPQIndex(IVFVectorIndex):
             for r in qrows
             if r.q_vec is not None and None not in r.q_vec
         ]
-        luts = spark.createDataFrame(
-            lut_rows, "q_id long, luts array<array<bigint>>"
+        luts = local_table(
+            spark, lut_rows, "q_id long, luts array<array<bigint>>"
         )
         codes = self.pq_codes_store.read_where(
             spark, [("bucket", "in", probed)]

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from calorista_spark.catalog import local_table
+
 # end-of-word marker, kept out of the corpus alphabet
 EOW = "▁"
 
@@ -338,7 +340,8 @@ def learn_bpe_merges_driver(
                 heapq.heappush(heap, (-c, p[0], p[1]))
 
     spark = docs.sparkSession
-    vocab = spark.createDataFrame(
+    vocab = local_table(
+        spark,
         [(w, c, list(s)) for (s, c), w in zip(words, (r["word"] for r in collected))],
         "word string, cnt long, symbols array<string>",
     )

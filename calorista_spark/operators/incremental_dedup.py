@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from calorista_spark.catalog import local_table
 from calorista_spark.operators.checkpoint import stage_checkpoint
 from calorista_spark.operators.similarity import (
     MINHASH_A,
@@ -223,8 +224,8 @@ class NearDupIndex:
         """The admitted corpus's (doc_id, sig) snapshot (empty frame
         on a fresh index)."""
         if self.store.latest_version() is None:
-            return spark.createDataFrame(
-                [], "doc_id long, sig array<bigint>"
+            return local_table(
+                spark, [], "doc_id long, sig array<bigint>"
             )
         return self.store.read(spark)
 

@@ -50,9 +50,11 @@ recomputes the dominant tokenize/hash work once per consumer):
   |sources| rows; computing them driver-side (same integer
   quantization as corpus_layout.source_temperature_weights — IEEE
   sqrt and double division are correctly rounded everywhere, so
-  Python, the JVM, and DuckDB agree bit-for-bit) and broadcasting a
-  literal rate table back removes a cascade of nested one-row
-  broadcast stages that AQE otherwise materializes one job at a time.
+  Python, the JVM, and DuckDB agree bit-for-bit) and joining them
+  back as a driver-local relation (``catalog.local_table``) removes a
+  cascade of nested one-row broadcast stages that AQE otherwise
+  materializes one job at a time. The rate table is built once on the
+  driver: broadcasting it runs no job and starts no Python worker.
   This mirrors production practice: mixture weights are a planning
   artifact, not a per-row computation.
 
@@ -85,7 +87,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from calorista_spark.catalog import read_table
+from calorista_spark.catalog import local_table, read_table
 from calorista_spark.operators.checkpoint import stage_checkpoint
 from calorista_spark.operators.similarity import (
     lsh_candidate_pairs,
@@ -358,7 +360,8 @@ def build_e2e_stages(
         .collect()
     )
     rates = _mixture_rates(per_src)
-    rates_df = spark.createDataFrame(
+    rates_df = local_table(
+        spark,
         [(s, bp) for s, bp in sorted(rates.items())],
         "source string, rate_bp long",
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from calorista_spark.catalog import read_table
+from calorista_spark.catalog import local_table, read_table
 from calorista_spark.operators.bpe import bpe_words_of, bpe_words_sql
 from calorista_spark.queries.registry import query
 
@@ -179,7 +179,8 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (TakeOrdered top-N by count — standard frequency truncation);
     # a no-op at test SFs where the vocab is tiny
     merges, _ = learn_bpe_merges_driver(docs, 8, max_words=1_000_000)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (i + 1, left, right, cnt)
             for i, (left, right, cnt) in enumerate(merges)

@@ -28,7 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from calorista_spark.catalog import read_table
+from calorista_spark.catalog import local_table, read_table
 from calorista_spark.queries.registry import query
 
 _TOUCHED = ("2024-01-05", "2024-01-17")
@@ -224,8 +224,8 @@ def store_partition_merge_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         if d in _TOUCHED and set(fl) & set(p1.get(d, [])):
             raise RuntimeError(f"touched partition {d} reused old files")
         carried.append((d, same))
-    flags = spark.createDataFrame(
-        carried, "event_date string, files_carried boolean"
+    flags = local_table(
+        spark, carried, "event_date string, files_carried boolean"
     ).select(
         F.col("event_date").cast("date").alias("event_date"), "files_carried"
     )

@@ -7,7 +7,10 @@ default here is chosen to be correct at both ends:
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast-join demotion replace hand-tuned shuffle counts.
 - Arrow on: pandas_udf / applyInPandas paths move columnar batches,
-  not pickled rows.
+  not pickled rows. Driver-built tables enter plans as a
+  ``LocalRelation`` through ``catalog.local_table``; above
+  ``spark.sql.execution.arrow.localRelationThreshold`` they become
+  JVM-side Arrow batches, still with no Python worker.
 - ``spark.sql.shuffle.partitions`` stays modest locally; AQE coalesces
   it anyway, and on a real cluster the operator would set it near
   2-3x total cores (or rely on AQE's initial/max partition bounds).

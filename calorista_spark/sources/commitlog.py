@@ -127,6 +127,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from calorista_spark.catalog import local_table
 from calorista_spark.operators.merge import merge_upsert, merge_upsert_cdc
 
 
@@ -2852,9 +2853,7 @@ class CommitLogStore:
                 yield _pd.DataFrame({"n_cols": done})
 
             n = (
-                spark.createDataFrame(
-                    [(f,) for f in todo], "file string"
-                )
+                local_table(spark, [(f,) for f in todo], "file string")
                 .repartition(min(len(todo), 64))
                 .mapInPandas(_build, "n_cols int")
                 .count()
@@ -3756,7 +3755,7 @@ class CommitLogStore:
         from pyspark.sql import functions as F
 
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_table(spark, [], schema)
         # files are written under PHYSICAL column names (stable across
         # rename/drop — r13 column mapping); plan physical, present
         # logical at the end
@@ -3912,14 +3911,18 @@ class CommitLogStore:
                             )
 
         par = spark.sparkContext.defaultParallelism
+        # the planner sizes this frame from the few-row path table, but
+        # each path expands to every deleted position of its file: past
+        # the cap the anti-join must shuffle, never plan a broadcast
         return (
-            spark.createDataFrame(
-                pairs, "__dv_path string, __dv_sidecar string"
+            local_table(
+                spark, pairs, "__dv_path string, __dv_sidecar string"
             )
             .repartition(max(1, min(len(pairs), par)))
             .mapInPandas(
                 _decode_chunks, "__dv_path string, __dv_pos long"
             )
+            .hint("merge")
         )
 
     def _file_diff(
@@ -4161,7 +4164,8 @@ class CommitLogStore:
         out_schema = T.StructType.fromJson(json.loads(end_meta["schema"]))
         end_mapping = end_meta.get("column_mapping") or {}
         if not frames:
-            return spark.createDataFrame(
+            return local_table(
+                spark,
                 [],
                 T.StructType(
                     list(out_schema.fields)
@@ -4325,7 +4329,8 @@ class CommitLogStore:
             ]
             for v in todo
         }
-        bdf = df.sparkSession.createDataFrame(
+        bdf = local_table(
+            df.sparkSession,
             [
                 (v, offsets[v], bounds_by_part[v], salts_by_part[v])
                 for v in sorted(todo)

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from calorista_spark.catalog import local_table
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -123,7 +125,8 @@ def fetch_exercises(
     downstream (``sources/payload.py``)."""
     params = {"date": date} if date else {}
     payload = source("exercises.get", params)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(date, payload)],
         T.StructType(
             [
@@ -148,7 +151,8 @@ def search_foods(
         "foods.search",
         {"search_expression": query, "max_results": str(max_results)},
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(query, max_results, payload)],
         T.StructType(
             [

@@ -101,6 +101,24 @@ def test_each_shared_stage_materializes_once(spark, sf_dir):
         release_caches(spark)
 
 
+def test_mixture_rates_join_as_local_relation(spark, sf_dir):
+    """The driver-planned rate table enters the flags plan as a
+    LocalRelation (built once in the JVM), not a LogicalRDD over a
+    parallelized Python list whose every scan task starts a Python
+    worker."""
+    frames, _ = build_e2e_stages(spark, sf_dir)
+    try:
+        leaves = frames["flags"]._jdf.queryExecution().optimizedPlan().collectLeaves()
+        rate_side = [
+            leaves.apply(i).nodeName()
+            for i in range(leaves.size())
+            if "rate_bp" in leaves.apply(i).output().toString()
+        ]
+        assert rate_side == ["LocalRelation"], rate_side
+    finally:
+        release_caches(spark)
+
+
 def test_shard_manifest_consistency(spark, sf_dir):
     shards = QUERIES["corpus_e2e_shards"](spark, sf_dir).collect()
     release_caches(spark)
